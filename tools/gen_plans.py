@@ -5,6 +5,12 @@ assertions live in tests/test_plans.py; this artifact is the
 human-readable audit trail (PushedFilters reaching scans, Exchange
 counts, broadcast placement, WholeStageCodegen coverage).
 
+The plan session is pinned to local[8] with 8 shuffle partitions;
+SPARK_GRAFT_CPUS and SPARK_SHUFFLE_PARTITIONS are ignored on purpose.
+Exchange widths (hashpartitioning(..., 8)) are part of the committed
+audit, and tests/test_plans.py diffs it byte for byte, so the output
+must not follow the caller's core count.
+
 Usage: python tools/gen_plans.py > PLANS.md
 """
 
@@ -51,14 +57,14 @@ def trim(plan: str, max_lines: int = 40) -> str:
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    os.environ["SPARK_GRAFT_CPUS"] = "8"
     from pyspark.sql import functions as F
 
     from lakefs_spark.session import get_spark
     from lakefs_spark.storage.repo import Repository
     import __spark_entry__ as E
 
-    spark = get_spark("plans")
+    spark = get_spark("plans", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     sections: list[tuple[str, str, str]] = []
